@@ -58,10 +58,16 @@ def _write(out_dir: str, name: str, cols: dict[str, pa.Array]) -> None:
     pq.write_table(pa.table(cols), os.path.join(out_dir, f"{name}.parquet"))
 
 
-def generate(out_dir: str, sf: float) -> None:
-    """Write all tables for scale factor ``sf`` into ``out_dir``."""
+def generate(out_dir: str, sf: float, tables=TABLES) -> None:
+    """Write ``tables`` (default: all) for scale factor ``sf`` into
+    ``out_dir``.  Each of the four table families (the star schema,
+    ``events``, ``documents``, ``embeddings``) draws from its own
+    generator, so a table's values do not depend on which others are
+    written."""
     os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng(TABLE_SEED)
+    unknown = set(tables) - set(TABLES)
+    if unknown:
+        raise ValueError(f"unknown tables: {sorted(unknown)}")
     n_cust = max(1, int(150_000 * sf))
     n_supp = max(1, int(10_000 * sf))
     n_part = max(1, int(200_000 * sf))
@@ -72,30 +78,51 @@ def generate(out_dir: str, sf: float) -> None:
     n_docs = max(500, int(50_000 * sf))
     n_vecs = max(500, int(20_000 * sf))
 
-    _write(out_dir, "region", {
+    if set(tables) & set(TABLES[:7]):
+        _star(out_dir, tables, n_cust, n_supp, n_part, n_ord, n_line)
+    if "events" in tables:
+        _events(out_dir, n_ev, n_users)
+    if "documents" in tables:
+        _documents(out_dir, n_docs)
+    if "embeddings" in tables:
+        _embeddings(out_dir, n_vecs)
+
+
+def _rng(family: int) -> np.random.Generator:
+    return np.random.default_rng([TABLE_SEED, family])
+
+
+def _star(out_dir, tables, n_cust, n_supp, n_part, n_ord, n_line) -> None:
+    rng = _rng(0)
+
+    def write(name, cols):
+        if name in tables:
+            _write(out_dir, name, cols)
+
+    write("region", {
         "r_regionkey": pa.array(range(5), pa.int32()),
         "r_name": pa.array(_REGIONS),
     })
-    _write(out_dir, "nation", {
+    write("nation", {
         "n_nationkey": pa.array(range(25), pa.int32()),
         "n_name": pa.array([f"NATION_{i}" for i in range(25)]),
         "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
     })
-    _write(out_dir, "customer", {
+    write("customer", {
         "c_custkey": pa.array(np.arange(n_cust, dtype="int64")),
         "c_name": pa.array([f"Customer#{i:09d}" for i in range(n_cust)]),
         "c_nationkey": pa.array(rng.integers(0, 25, n_cust, dtype="int32")),
         "c_acctbal": pa.array(np.round(rng.uniform(-999.99, 9999.99, n_cust), 2)),
         "c_mktsegment": pa.array(rng.choice(_SEGMENTS, n_cust)),
     })
-    _write(out_dir, "supplier", {
+    write("supplier", {
         "s_suppkey": pa.array(np.arange(n_supp, dtype="int64")),
         "s_name": pa.array([f"Supplier#{i:09d}" for i in range(n_supp)]),
         "s_nationkey": pa.array(rng.integers(0, 25, n_supp, dtype="int32")),
         "s_acctbal": pa.array(np.round(rng.uniform(-999.99, 9999.99, n_supp), 2)),
     })
     names = [f"{a} {b}" for a in _PART_ADJ for b in _PART_NOUN]
-    _write(out_dir, "part", {
+    write("part", {
         "p_partkey": pa.array(np.arange(n_part, dtype="int64")),
         "p_name": pa.array(rng.choice(names, n_part)),
         "p_brand": pa.array([f"Brand#{i}" for i in rng.integers(1, 26, n_part)]),
@@ -106,7 +133,7 @@ def generate(out_dir: str, sf: float) -> None:
 
     first, last = _day(1995, 1, 1), _day(2001, 8, 1)
     order_day = rng.integers(first, last + 1, n_ord)
-    _write(out_dir, "orders", {
+    write("orders", {
         "o_orderkey": pa.array(np.arange(n_ord, dtype="int64")),
         "o_custkey": pa.array(rng.integers(0, n_cust, n_ord)),
         "o_orderstatus": pa.array(rng.choice(["F", "O", "P"], n_ord)),
@@ -116,7 +143,7 @@ def generate(out_dir: str, sf: float) -> None:
     })
     l_order = rng.integers(0, n_ord, n_line)
     qty = rng.integers(1, 51, n_line).astype("float64")
-    _write(out_dir, "lineitem", {
+    write("lineitem", {
         "l_orderkey": pa.array(l_order),
         "l_partkey": pa.array(rng.integers(0, n_part, n_line)),
         "l_suppkey": pa.array(rng.integers(0, n_supp, n_line)),
@@ -130,7 +157,10 @@ def generate(out_dir: str, sf: float) -> None:
         "l_shipdate": _ts(order_day[l_order] + rng.integers(1, 96, n_line)),
     })
 
-    # events: one month of distinct, increasing timestamps
+
+def _events(out_dir, n_ev, n_users) -> None:
+    """One month of distinct, increasing timestamps."""
+    rng = _rng(1)
     start_us = _day(2024, 1, 1) * 86_400_000_000
     span_us = 30 * 86_400_000_000
     ts = start_us + np.sort(rng.choice(span_us, n_ev, replace=False))
@@ -143,8 +173,11 @@ def generate(out_dir: str, sf: float) -> None:
         "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)]),
     })
 
-    # documents: random word sequences; 5 % are near-duplicates of an
-    # earlier document (its text plus a marker word), 0.2 % exact copies
+
+def _documents(out_dir, n_docs) -> None:
+    """Random word sequences; 5 % are near-duplicates of an earlier
+    document (its text plus a marker word), 0.2 % exact copies."""
+    rng = _rng(2)
     texts: list[str] = []
     for i in range(n_docs):
         r = rng.random()
@@ -162,7 +195,10 @@ def generate(out_dir: str, sf: float) -> None:
         "n_chars": pa.array(np.array([len(t) for t in texts], dtype="int64")),
     })
 
-    # embeddings: unit vectors scattered around ten cluster centroids
+
+def _embeddings(out_dir, n_vecs) -> None:
+    """Unit vectors scattered around ten cluster centroids."""
+    rng = _rng(3)
     centroids = rng.normal(0.0, 1.0, (_EMBED_CLUSTERS, _EMBED_DIM))
     labels = rng.integers(0, _EMBED_CLUSTERS, n_vecs)
     vecs = centroids[labels] + rng.normal(0.0, 1.5, (n_vecs, _EMBED_DIM))

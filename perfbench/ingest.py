@@ -10,13 +10,19 @@ order).
 
 Two phases:
 
-- catch-up: ``BACKLOG_FILES`` files have landed before the stream
-  starts; the stream drains them ``FILES_PER_TRIGGER`` files per
-  micro-batch.  Throughput is rows committed per second.
-- live: files land open-loop at ``LIVE_FILES_PER_S``, well below
-  catch-up capacity.  Freshness of a file is the time from when it was
-  due to land until the micro-batch holding it has committed in
-  PostgreSQL, so a stall also delays the files due during it.
+- catch-up: a backlog of files has landed before the stream starts;
+  the stream drains it ``FILES_PER_TRIGGER`` files per micro-batch.
+  Throughput is rows committed per second.
+- live: files land open-loop at ``LIVE_FILES_PER_S``, below catch-up
+  capacity.  Freshness of a file is the time from when it was due to
+  land until the micro-batch holding it has committed in PostgreSQL, so
+  a stall also delays the files due during it.
+
+A run of ``seconds`` gives each phase about half of it (``phase_files``):
+the backlog holds what catch-up drains in ``seconds / 2`` at the
+nominal ``CATCHUP_FILES_PER_S``, and the live phase lasts
+``seconds / 2``.  The file counts depend only on ``seconds``, so every
+run with the same ``seconds`` does the same work.
 
 After the run the table is compared value for value with its batch
 twin: ``normalize_events`` over every landed file, deduplicated on
@@ -39,8 +45,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 ROWS_PER_FILE = 500
-BACKLOG_FILES = 40
 FILES_PER_TRIGGER = 8
+# catch-up throughput on 4 cores is 4.5-7 files/s, depending on load
+CATCHUP_FILES_PER_S = 5.0
 LIVE_FILES_PER_S = 4.0
 REDELIVER_SHARE = 0.10
 LATE_SHARE = 0.05
@@ -55,6 +62,14 @@ DDL = (
     "event_id bigint, ts timestamp, user_id bigint, event_type text, "
     "value double precision, props text, event_date date, k bigint"
 )
+
+
+def phase_files(seconds: float) -> tuple[int, int]:
+    """Files in the catch-up backlog (whole micro-batches) and files
+    landed live, for a run of ``seconds``."""
+    half = seconds / 2
+    batches = max(1, round(half * CATCHUP_FILES_PER_S / FILES_PER_TRIGGER))
+    return batches * FILES_PER_TRIGGER, max(1, math.ceil(half * LIVE_FILES_PER_S))
 
 
 def plan_files(events_path: str, seed: int, n_files: int) -> list[pa.Table]:
@@ -157,11 +172,11 @@ def run(spark, sock, work, seed, seconds, events_path, py4j=None,
         read_event_stream,
     )
 
-    n_live = max(1, math.ceil(seconds * LIVE_FILES_PER_S))
-    files = plan_files(events_path, seed, BACKLOG_FILES + n_live)
+    backlog, n_live = phase_files(seconds)
+    files = plan_files(events_path, seed, backlog + n_live)
     src_dir = os.path.join(work, "src")
     os.makedirs(src_dir)
-    for i in range(BACKLOG_FILES):
+    for i in range(backlog):
         land(src_dir, i, files[i])
 
     checkpoint = os.path.join(work, "checkpoint")
@@ -174,7 +189,7 @@ def run(spark, sock, work, seed, seconds, events_path, py4j=None,
     def sink(batch_df, batch_id):
         t0 = time.perf_counter()
         ids = batch_files(checkpoint, batch_id)
-        landed = BACKLOG_FILES + (gen.landed if gen else 0)
+        landed = backlog + (gen.landed if gen else 0)
         target = "@perfbench-absent" if batch_id == fail_batch else sock
         error = None
         try:
@@ -223,11 +238,11 @@ def run(spark, sock, work, seed, seconds, events_path, py4j=None,
         .start()
     )
     try:
-        wait_committed(BACKLOG_FILES, 120)
+        wait_committed(backlog, 120)
         # from the first micro-batch reaching the sink: stream start-up
         # (query init, first file listing) is not catch-up throughput
-        catchup_s = max(committed[i] for i in range(BACKLOG_FILES)) - batches[0]["start"]
-        gen = Generator(src_dir, files[BACKLOG_FILES:], BACKLOG_FILES,
+        catchup_s = max(committed[i] for i in range(backlog)) - batches[0]["start"]
+        gen = Generator(src_dir, files[backlog:], backlog,
                         time.perf_counter(), LIVE_FILES_PER_S)
         gen.start()
         gen.join()
@@ -246,8 +261,8 @@ def run(spark, sock, work, seed, seconds, events_path, py4j=None,
     return {
         "files": files,
         "src_dir": src_dir,
-        "catchup_files": BACKLOG_FILES,
-        "catchup_rows": sum(f.num_rows for f in files[:BACKLOG_FILES]),
+        "catchup_files": backlog,
+        "catchup_rows": sum(f.num_rows for f in files[:backlog]),
         "catchup_s": catchup_s,
         "freshness": freshness,
         "generator_late_s": gen.late_s,
@@ -262,23 +277,27 @@ def run(spark, sock, work, seed, seconds, events_path, py4j=None,
     }
 
 
-def _parse_pg(text: str) -> dict[int, tuple]:
-    out = {}
+def _parse_pg(text: str) -> tuple[dict[int, tuple], set[int]]:
+    """The table's rows by ``event_id``, and the ids that occur more
+    than once (duplicates an idempotent sink must never leave)."""
+    out, dups = {}, set()
     for row in csv.reader(io.StringIO(text)):
         if row == COLUMNS:
             continue
         eid, ts, uid, etype, value, props, day, k = row
+        if int(eid) in out:
+            dups.add(int(eid))
         out[int(eid)] = (
             int(eid), dt.datetime.fromisoformat(ts), int(uid), etype,
             float(value), props, dt.date.fromisoformat(day),
             int(k) if k != "" else None,
         )
-    return out
+    return out, dups
 
 
 def check(spark, sock, result) -> set[int]:
     """Compare the table with the batch twin; return the files holding
-    a row that is missing, extra or different."""
+    a row that is missing, extra, different or stored more than once."""
     from near_indexer_for_explorer_spark.sources.pg import pg_read_csv
     from near_indexer_for_explorer_spark.streaming.pipelines import (
         EVENT_SCHEMA,
@@ -289,8 +308,8 @@ def check(spark, sock, result) -> set[int]:
         spark.read.schema(EVENT_SCHEMA).parquet(result["src_dir"])
     ).dropDuplicates(["event_id"])
     twin = {r["event_id"]: tuple(r[c] for c in COLUMNS) for r in twin_df.collect()}
-    table = _parse_pg(pg_read_csv(sock, f"SELECT {', '.join(COLUMNS)} FROM {TABLE}"))
-    bad_ids = {k for k in twin.keys() | table.keys() if twin.get(k) != table.get(k)}
+    table, dups = _parse_pg(pg_read_csv(sock, f"SELECT {', '.join(COLUMNS)} FROM {TABLE}"))
+    bad_ids = dups | {k for k in twin.keys() | table.keys() if twin.get(k) != table.get(k)}
     return {
         i for i, f in enumerate(result["files"])
         if bad_ids.intersection(f.column("event_id").to_pylist())
@@ -305,3 +324,11 @@ def rows_inserted(sock: str) -> int:
     )
     lines = text.splitlines()[1:]
     return int(lines[0]) if lines else 0
+
+
+def insert_duplicate(pg) -> None:
+    """Self-test: store a second copy of one row in the table (a
+    ``PgServer``), as a sink without the key and merge would after a
+    redelivery."""
+    pg.psql(f"ALTER TABLE {TABLE} DROP CONSTRAINT {TABLE}_pkey")
+    pg.psql(f"INSERT INTO {TABLE} SELECT * FROM {TABLE} ORDER BY event_id LIMIT 1")

@@ -60,16 +60,24 @@ class PgServer:
     def _wait_ready(self, timeout: float = 30.0) -> None:
         deadline = time.monotonic() + timeout
         while True:
-            probe = subprocess.run(
-                ["psql", "-h", self.sock, "-p", str(PG_PORT), "-U", "pguser",
-                 "-d", "postgres", "-qAt", "-c", "SELECT 1"],
-                capture_output=True, text=True,
-            )
+            probe = subprocess.run(self._psql_cmd("SELECT 1"),
+                                   capture_output=True, text=True)
             if probe.returncode == 0:
                 return
             if self.proc.poll() is not None or time.monotonic() > deadline:
                 raise RuntimeError(f"postgres did not start: {probe.stderr.strip()}")
             time.sleep(0.05)
+
+    def _psql_cmd(self, sql: str) -> list[str]:
+        return ["psql", "-h", self.sock, "-p", str(PG_PORT), "-U", "pguser",
+                "-d", "postgres", "-v", "ON_ERROR_STOP=1", "-qAt", "-c", sql]
+
+    def psql(self, sql: str) -> str:
+        """Run one statement on the server; raise if it fails."""
+        proc = subprocess.run(self._psql_cmd(sql), capture_output=True, text=True)
+        if proc.returncode != 0:
+            raise RuntimeError(f"psql failed: {proc.stderr.strip()}")
+        return proc.stdout
 
     def stop(self) -> None:
         if self.proc is None or self.proc.poll() is not None:

@@ -4,8 +4,9 @@ One client, closed loop: a request is one registered query, built
 through ``__spark_entry__.queries()`` and collected in full to the
 client; the next request is sent when it returns.  Requests are issued
 in rounds; each round is a seeded shuffle of the workload's request
-multiset, and a run issues whole rounds until ``seconds`` have passed,
-so every run does the same work in a seed-dependent order.
+multiset.  A run of ``seconds`` issues ``rounds(seconds)`` whole
+rounds, about ``seconds`` of work on 4 cores; the count depends only on
+``seconds``, so every run does the same work in a seed-dependent order.
 
 Results are checked after the timed loop, against the query's
 ``oracle_sql()`` run in DuckDB over the same parquet files.
@@ -22,19 +23,26 @@ import time
 from stats import fingerprint
 
 # An operator whose construction fires a tower of Spark jobs on every
-# call (IVF-PQ codebook training; nothing of it is memoized), plus two
-# consumers of the session memo, repeated so that most of their calls
-# are memo hits and a run has 34 latency samples.  Their hits form two
-# latency clusters (lsh_s_curve about half of ann_ivf_topk); the repeat
-# counts put the median (17th of 34) inside the lsh_s_curve cluster and
-# the tail (24th) inside the ann_ivf_topk cluster, each a few samples
-# from the edge, so that neither sits on the boundary between clusters
-# where a small shift would move it by a whole cluster.
-BUILD_HEAVY = ["ivfpq_ann_topk"] + ["lsh_s_curve"] * 21 + ["ann_ivf_topk"] * 12
+# call (IVF-PQ codebook training; nothing of it is memoized), plus a
+# consumer of the session memo (the MinHash/LSH candidate relation),
+# whose first call in a run builds the artifact and whose other calls
+# hit it.  The hits are most of the samples and form one latency
+# cluster, so the median and the tail (x[n-11]) both sit well inside
+# it: over two rounds the 34 samples are 31 hits, the build and the two
+# tower requests, which leaves the tail 7 samples below the cluster's
+# top.  The tower requests and the build show in queries_per_s.
+BUILD_HEAVY = ["ivfpq_ann_topk"] + ["lsh_s_curve"] * 16
+# nominal duration of a round on 4 cores (the first, which builds the
+# memo artifact, takes ~18 s, later ones ~9 s)
+ROUND_S = 12.0
+
+
+def rounds(seconds: float) -> int:
+    return max(1, round(seconds / ROUND_S))
 
 
 def run(spark, queries, sf_dir, seed, seconds, py4j=None):
-    """Issue whole rounds of requests for at least ``seconds``.
+    """Issue ``rounds(seconds)`` rounds of requests.
 
     Returns one record per request: name, its result (columns and
     rows), latency and per-phase times.  ``py4j`` (a ``Py4jCounter``)
@@ -43,8 +51,7 @@ def run(spark, queries, sf_dir, seed, seconds, py4j=None):
     rng = random.Random(seed)
     sc = spark.sparkContext
     records = []
-    start = time.perf_counter()
-    while not records or time.perf_counter() - start < seconds:
+    for _ in range(rounds(seconds)):
         order = list(BUILD_HEAVY)
         rng.shuffle(order)
         for name in order:

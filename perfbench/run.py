@@ -1,7 +1,7 @@
-"""Benchmark of the indexer: explorer reads, operator builds and
-streaming ingest into PostgreSQL.
+"""Benchmark of the indexer: operator builds and streaming ingest into
+PostgreSQL.
 
-    python3 perfbench/run.py --workload explorer_read --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload build_heavy --seed 1 --seconds 25 --trace 0
 
 Run from the root of a checkout.  Workloads, metric names and units are
 declared in ``BENCHMARK.json``; see ``perfbench/README.md``.  The last
@@ -57,15 +57,17 @@ def _cores() -> int:
     return len(os.sched_getaffinity(0))
 
 
-def _tables(sf: float) -> str:
-    """Generate (once per checkout) and return the table directory."""
+def _tables(sf: float, tables: tuple[str, ...] | None = None) -> str:
+    """Generate (once per checkout) and return the directory of
+    ``tables`` (default: all) at scale factor ``sf``."""
     import datagen
 
-    out = os.path.join(WORK, "data", f"sf{sf}")
+    name = f"sf{sf}" if tables is None else f"sf{sf}-{'-'.join(tables)}"
+    out = os.path.join(WORK, "data", name)
     if not os.path.exists(os.path.join(out, "_DONE")):
         tmp = out + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
-        datagen.generate(tmp, sf)
+        datagen.generate(tmp, sf, tables or datagen.TABLES)
         open(os.path.join(tmp, "_DONE"), "w").close()
         shutil.rmtree(out, ignore_errors=True)
         os.replace(tmp, out)
@@ -233,6 +235,9 @@ def main(argv=None) -> int:
                     help="self-test: alter this query's result before the check")
     ap.add_argument("--inject-sink-failure", type=int, default=None,
                     help="self-test: send this micro-batch to an absent server")
+    ap.add_argument("--inject-duplicate", action="store_true",
+                    help="self-test: insert a second copy of one row into the "
+                         "table after the stream stops")
     args = ap.parse_args(argv)
     # on SIGTERM unwind normally, so the running worker's process group
     # is stopped too
@@ -248,7 +253,7 @@ def main(argv=None) -> int:
 
     os.makedirs(WORK, exist_ok=True)
     args.sf_dir = _tables(args.query_sf)
-    args.events_dir = _tables(EVENTS_SF)
+    args.events_dir = _tables(EVENTS_SF, ("events",))
     # the first run in a checkout also computes the reference answers
     sys.path.insert(0, ROOT)
     import __spark_entry__
@@ -261,6 +266,8 @@ def main(argv=None) -> int:
         extra += ["--inject-wrong", args.inject_wrong]
     if args.inject_sink_failure is not None:
         extra += ["--inject-sink-failure", str(args.inject_sink_failure)]
+    if args.inject_duplicate:
+        extra += ["--inject-duplicate"]
 
     env = _environment()
     main_res, peak = _worker(args, _env(None), "main.json", extra=extra)

@@ -4,7 +4,7 @@
 
 Pins the metric names and units the benchmark reports, and shows that
 its correctness checks count failures: a deliberately wrong query
-result, and a micro-batch whose sink call fails.  The query tables are
+result, a micro-batch whose sink call fails, and a row stored twice.  The query tables are
 sf0.001.  The first run in a checkout also generates the tables and
 computes the oracle answers (a few minutes).
 """
@@ -92,9 +92,9 @@ def test_wrong_result_is_counted():
                "--inject-wrong", "lsh_s_curve")
     assert _units(res) == END_TO_END
     assert res["correct"] is False
-    assert res["attempted"] >= 11
+    assert res["attempted"] == 17
     # every lsh_s_curve request of the round returned the altered result
-    assert res["failed"] == 21
+    assert res["failed"] == 16
 
 
 def test_failed_sink_batch_is_counted():
@@ -104,3 +104,13 @@ def test_failed_sink_batch_is_counted():
     assert res["correct"] is False
     assert res["failed"] >= 1
     assert res["metrics"]["sources.pg.sink_failures"]["value"] == 1
+
+
+def test_duplicate_row_is_counted():
+    # a second copy of a row, as a sink without its key and merge would
+    # store after a redelivery, must fail the value-for-value check
+    res = _run("--workload", "ingest_pg", "--seed", "3", "--trace", "0",
+               "--inject-duplicate")
+    assert _units(res) == END_TO_END
+    assert res["correct"] is False
+    assert res["failed"] >= 1

@@ -3,8 +3,9 @@
 Nothing here changes what the program computes.  A traced run:
 
 - tags every Spark job with a job group naming its request and phase
-  (``b<i>`` construction, ``p<i>`` planning, ``x<i>`` the action), so
-  Spark's status tracker and event log attribute jobs to layers;
+  (``b<i>`` construction, ``p<i>`` planning, ``x<i>`` the action), and
+  the benchmark's own jobs with ``check``, so Spark's status tracker and
+  event log attribute jobs to layers;
 - counts py4j commands by wrapping the gateway client's
   ``send_command`` (the py4j traffic of plan construction);
 - counts builds and lookups of the session memo by swapping
@@ -18,8 +19,27 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import statistics
 from collections import defaultdict
+
+# job group of the benchmark's own Spark jobs (warm-up, result checks)
+CHECK_GROUP = "check"
+# job groups of a traced request's phases: construction, planning, action
+_PHASE_GROUP = re.compile(r"([bpx])\d+")
+
+
+def phase_of(group: str | None) -> str:
+    """The phase a job group names: ``b``/``p``/``x`` for a request's
+    construction, planning or action, ``check`` for the benchmark's own
+    jobs, ``-`` for anything else (a streaming query runs its jobs under
+    its run id, a UUID)."""
+    if not group:
+        return "-"
+    m = _PHASE_GROUP.fullmatch(group)
+    if m:
+        return m.group(1)
+    return CHECK_GROUP if group == CHECK_GROUP else "-"
 
 
 class Py4jCounter:
@@ -76,8 +96,7 @@ def event_log_conf(log_dir: str) -> str:
 
 def read_event_log(log_dir: str) -> dict[str, dict]:
     """Per-task metrics from the event log(s) in ``log_dir``, summed by
-    job-group phase: the group's leading letter (``b``, ``p``, ``x``)
-    or ``-`` for jobs run outside any group.
+    job-group phase (``phase_of``).
 
     Each phase maps to jobs, stages, task time, per-stage task times
     (for skew), shuffle-write, spill and input bytes."""
@@ -99,11 +118,10 @@ def read_event_log(log_dir: str) -> dict[str, dict]:
                 ev = json.loads(line)
                 kind = ev.get("Event")
                 if kind == "SparkListenerJobStart":
-                    group = (ev.get("Properties") or {}).get("spark.jobGroup.id") or "-"
-                    phase = phases[group[0]]
-                    phase["jobs"] += 1
+                    key = phase_of((ev.get("Properties") or {}).get("spark.jobGroup.id"))
+                    phases[key]["jobs"] += 1
                     for sid in ev.get("Stage IDs", []):
-                        stage_phase[sid] = group[0]
+                        stage_phase[sid] = key
                 elif kind == "SparkListenerTaskEnd":
                     m = ev.get("Task Metrics")
                     if not m:

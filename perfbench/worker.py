@@ -23,8 +23,22 @@ import sys
 import time
 
 from stats import median, tail
+from tracing import CHECK_GROUP
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@contextlib.contextmanager
+def _job_group(spark, group):
+    """Run the benchmark's own Spark jobs (warm-up, checks) under their
+    own job group, which the per-layer metrics leave out."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "perfbench")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def _metrics_queries(records, wall):
@@ -97,7 +111,9 @@ def _layers_ingest(res, phases, cores):
         "sources.pg.useful_ratio": inserted / delivered if delivered else 0.0,
         "sources.pg.sink_failures": sum(1 for b in res["batches"] if not b["ok"]),
     }
-    out.update(exec_metrics(list(phases.values()), sum(batch_s), cores))
+    # every job but the benchmark's own: the stream's, under its run id
+    out.update(exec_metrics([p for k, p in phases.items() if k != CHECK_GROUP],
+                            sum(batch_s), cores))
     return out
 
 
@@ -106,7 +122,10 @@ def _run_ingest(a, spark, pg, py4j):
 
     res = ingest.run(spark, pg.sock, a.work, a.seed, a.seconds, a.events,
                      py4j, a.inject_sink_failure)
-    failed = res["failed_files"] | ingest.check(spark, pg.sock, res)
+    if a.inject_duplicate:
+        ingest.insert_duplicate(pg)
+    with _job_group(spark, CHECK_GROUP):
+        failed = res["failed_files"] | ingest.check(spark, pg.sock, res)
     late = res["generator_late_s"] > ingest.MAX_GENERATOR_LATE_S
     res["rows_inserted"] = ingest.rows_inserted(pg.sock)
     e2e, detail = _metrics_ingest(res)
@@ -157,6 +176,7 @@ def main(argv=None) -> int:
     ap.add_argument("--event-log", default="")
     ap.add_argument("--inject-wrong", default=None)
     ap.add_argument("--inject-sink-failure", type=int, default=None)
+    ap.add_argument("--inject-duplicate", action="store_true")
     a = ap.parse_args(argv)
 
     sys.path.insert(0, ROOT)
@@ -181,7 +201,8 @@ def main(argv=None) -> int:
             _write(a.out, out)
             return 0
 
-        spark.range(1).count()
+        with _job_group(spark, CHECK_GROUP):
+            spark.range(1).count()
         py4j = memo = None
         if a.trace:
             from tracing import Py4jCounter, count_memo
