@@ -147,19 +147,32 @@ def _worker(args, env, out_name, trace=0, extra=()) -> tuple[dict, int]:
                             start_new_session=True)
     rss = TreePeakRss(proc.pid)
     rss.start()
+    cpu0 = _cpu_ticks()
     try:
         code = proc.wait(timeout=WORKER_TIMEOUT_S)
     finally:
         rss.done.set()
         rss.join()
         _stop_group(proc)
+    cpu1 = _cpu_ticks()
     if code != 0:
         raise RuntimeError(f"worker exited with {code}: {' '.join(cmd)}")
     with open(out) as fh:
         result = json.load(fh)
     shutil.rmtree(run_dir, ignore_errors=True)
     result["peak_mb_by_process"] = rss.peak_by_name
+    # CPU time the hypervisor gave to other guests while this process
+    # ran: when it is high, every time in the run reads long
+    total = sum(cpu1) - sum(cpu0)
+    result["cpu_steal_share"] = (cpu1[7] - cpu0[7]) / total if total else 0.0
     return result, rss.peak_kb / 1024
+
+
+def _cpu_ticks() -> list[int]:
+    """The machine-wide CPU counters of ``/proc/stat`` (user, nice,
+    system, idle, iowait, irq, softirq, steal, ...)."""
+    with open("/proc/stat") as fh:
+        return [int(x) for x in fh.readline().split()[1:]]
 
 
 def _stop_group(proc: subprocess.Popen) -> None:
@@ -271,7 +284,8 @@ def main(argv=None) -> int:
 
     env = _environment()
     main_res, peak = _worker(args, _env(None), "main.json", extra=extra)
-    detail = dict(main_res["detail"], peak_mb_by_process=main_res["peak_mb_by_process"])
+    detail = dict(main_res["detail"], peak_mb_by_process=main_res["peak_mb_by_process"],
+                  cpu_steal_share=main_res["cpu_steal_share"])
     if args.trace:
         log_dir = os.path.join(WORK, "eventlog")
         shutil.rmtree(log_dir, ignore_errors=True)
